@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The one Spark-internal hook the benchmark needs: block until every
+  * listener event posted so far has been delivered, so a traced call's
+  * job and task counters are complete before they are read. */
+object BenchBridge {
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
+}
