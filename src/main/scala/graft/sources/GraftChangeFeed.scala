@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
+  ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -160,14 +161,26 @@ private[sources] case class GraftFeedOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
+/** Under `Trigger.AvailableNow` the stream serves every version up to
+  * the head it saw when the query started ([[prepareForTriggerAvailableNow]])
+  * and then stops — across as many batches as the query runs, so a
+  * restart whose last batch never committed first re-runs that batch
+  * and then serves every version committed since, each exactly once. */
 private[sources] class GraftFeedStream(root: String, outSchema: StructType,
                                        startAt: Long,
                                        colMap: Map[String, String])
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  @volatile private var availableNowHead: Option[Long] = None
 
   override def initialOffset(): Offset = GraftFeedOffset(startAt - 1)
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowHead = Some(TxTable.currentVersion(root))
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
   override def latestOffset(): Offset =
     GraftFeedOffset(TxTable.currentVersion(root))
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    availableNowHead.map(GraftFeedOffset).getOrElse(latestOffset())
   override def deserializeOffset(json: String): Offset =
     GraftFeedOffset(json.trim.toLong)
   override def commit(end: Offset): Unit = ()   // retention is the table's

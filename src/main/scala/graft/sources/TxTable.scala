@@ -466,11 +466,7 @@ object TxTable {
     try {
       val out = Seq.newBuilder[FileEntry]
       moved.foreach { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toString), conf)
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val footer = try rdr.getFooter finally rdr.close()
-        val blocks = footer.getBlocks.asScala.toSeq
+        val blocks = footerBlocks(conf, p)
         val rows = blocks.map(_.getRowCount).sum
         if (rows > 0) {
           val (kmin, kmax, smin, smax, knn) = agg(blocks, key) match {
@@ -647,6 +643,18 @@ object TxTable {
     }
   }
 
+  /** The row groups a parquet file's footer declares (no data page
+    * read). */
+  private def footerBlocks(conf: org.apache.hadoop.conf.Configuration,
+                           p: Path)
+      : Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
+    import scala.jdk.CollectionConverters._
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toString), conf))
+    try rdr.getFooter.getBlocks.asScala.toSeq finally rdr.close()
+  }
+
   /** Write change rows (table columns + `_change_type`) as CDC sidecar
     * files for commit `v` (r17 — Delta's `_change_data`, written only
     * for tables created with `cdc = true`): the feed's rows are
@@ -654,8 +662,13 @@ object TxTable {
     * ([[changes]], the st43 subscribers, c71-style cascades) reads the
     * tiny change files instead of re-reading the full pre/post data
     * files and re-running the diff join — write-once-read-many, work
-    * ∝ changed rows. Empty change sets write nothing (a no-op commit
-    * stays metadata-only). */
+    * ∝ changed rows.
+    *
+    * The plan runs exactly once, as the write itself: emptiness is read
+    * afterwards from the footers of the files the write produced (a
+    * metadata read, no Spark job). Zero-row part files are dropped with
+    * the staging directory, and a commit whose change set is empty gets
+    * `None` — a no-op commit stays metadata-only. */
   private def writeCdcFiles(spark: SparkSession, df: DataFrame,
                             root: String, v: Long,
                             colMap: Map[String, String] = Map.empty)
@@ -667,20 +680,14 @@ object TxTable {
       if (colMap.isEmpty) df
       else df.select(df.columns.toSeq.map(c =>
         col(c).as(colMap.getOrElse(c, c))): _*)
-    // materialize ONCE (r18, ADVICE): the emptiness probe used to run
-    // the full CDC plan (for a merge, the full_outer pre/post diff
-    // join) and the parquet write then ran it AGAIN — localCheckpoint
-    // executes the plan a single time and both the probe and the write
-    // read the checkpointed blocks (same pattern as touchedFileNames;
-    // the blocks are ∝ changed rows, never data)
-    val mat = physDf.localCheckpoint()
-    if (mat.isEmpty) return None
     val tmp = Files.createTempDirectory(Paths.get(root), "stage-cdc-")
     try {
-      mat.write.mode("overwrite").parquet(tmp.toString)
+      physDf.write.mode("overwrite").parquet(tmp.toString)
+      val conf = spark.sessionState.newHadoopConf()
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val moved = listDir(tmp)
         .filter(_.getFileName.toString.startsWith("part-"))
+        .filter(footerBlocks(conf, _).map(_.getRowCount).sum > 0)
         .sortBy(_.getFileName.toString).zipWithIndex.map { case (p, i) =>
           val dest = dataDir(root).resolve(f"cdc-$v%010d-$nonce-$i.parquet")
           Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
@@ -690,6 +697,61 @@ object TxTable {
     } finally {
       listDir(tmp).foreach(Files.deleteIfExists(_))
       Files.deleteIfExists(tmp)
+    }
+  }
+
+  /** Test seam: when set, called with "data" or "cdc" right after that
+    * write of a [[stageWrites]] call has staged its files — a failure
+    * thrown here is a crash between staging and commit. */
+  private[graft] val testStageFault =
+    new java.util.concurrent.atomic.AtomicReference[String => Unit](null)
+
+  /** Stage one commit's data files and its change files TOGETHER. The
+    * two writes read the same (materialized) input and do not depend on
+    * each other, so the change-file write runs on a second thread while
+    * the calling thread runs `data`: the commit pays the longer of the
+    * two writes instead of their sum. With `changes = None` (no change
+    * feed, or nothing to feed) only `data` runs.
+    *
+    * The second thread is created per call, so it starts with a copy of
+    * the caller's SparkContext local properties (they live in an
+    * inheritable thread-local that Spark clones into child threads): the
+    * job group, description, scheduler pool, SQL execution id and any
+    * property the caller set. Cancelling the caller's job group (a
+    * stopped streaming query) therefore cancels the change-file job too,
+    * and listeners attribute it to the caller.
+    *
+    * Both writes finish before this returns; a failure in either one
+    * surfaces here, after the other has completed, and the caller then
+    * commits nothing — staged files stay unreferenced, invisible to
+    * every reader (the crash-safety contract of [[writeFiles]]). */
+  private def stageWrites[A](spark: SparkSession, root: String, v: Long,
+                             colMap: Map[String, String],
+                             changes: Option[DataFrame])(data: => A)
+      : (A, Option[Seq[String]]) = {
+    def faultAfter[T](what: String)(write: => T): T = {
+      val r = write
+      Option(testStageFault.get).foreach(_(what))
+      r
+    }
+    changes match {
+      case None => (faultAfter("data")(data), None)
+      case Some(ch) =>
+        @volatile var cdcOut: scala.util.Try[Option[Seq[String]]] = null
+        val cdcThread = new Thread(() => cdcOut = scala.util.Try(
+          faultAfter("cdc")(writeCdcFiles(spark, ch, root, v, colMap))),
+          "graft-stage-cdc")
+        cdcThread.setDaemon(true)
+        cdcThread.start()
+        val dataOut = scala.util.Try(faultAfter("data")(data))
+        try cdcThread.join()
+        catch { case e: InterruptedException => cdcThread.interrupt(); throw e }
+        (dataOut, cdcOut) match {
+          case (scala.util.Failure(e), c) =>
+            c.failed.foreach(e.addSuppressed)
+            throw e
+          case (scala.util.Success(a), c) => (a, c.get)
+        }
     }
   }
 
@@ -1241,54 +1303,6 @@ object TxTable {
     }
   }
 
-  /** Names of the live files whose key range intersects the update/
-    * delete key set — a broadcast range join over the (small) file-range
-    * table. STRING-typed keys (r15) prune on the lexicographic smin/smax
-    * stats when every live file carries them (a pre-r15 file without
-    * string stats forces the degrade for safety); probe-side nulls can
-    * never equal-match a key in upsert/delete, so null probes are
-    * dropped, not escalated. Non-string, non-integral keys cast to null
-    * on the BIGINT probe side, where a range test can never match — any
-    * such null probe degrades to touch-ALL-files (a full rewrite is
-    * correct, a missed file is not), matching the writer side's
-    * full-range stats for those keys. */
-  /** `preDistinct = true` (r18 optimization round) tells the pruning
-    * pass the caller ALREADY distinct'ed and materialized the key set —
-    * skip the internal distinct + localCheckpoint (one Spark job + one
-    * block write per commit) and read the caller's blocks directly. */
-  private def touchedFileNames(spark: SparkSession, files: Seq[FileEntry],
-                               updates: DataFrame, key: String,
-                               preDistinct: Boolean = false): Set[String] = {
-    import spark.implicits._
-    val keyIsString =
-      updates.schema(key).dataType == org.apache.spark.sql.types.StringType
-    if (keyIsString && files.forall(f => f.smin.isDefined && f.smax.isDefined)) {
-      val ks0 = updates.select(col(key).as("k")).filter(col("k").isNotNull)
-      val ks = if (preDistinct) ks0 else ks0.distinct().localCheckpoint()
-      val ranges = files.map(f => (f.name, f.smin.get, f.smax.get))
-        .toDF("name", "smin", "smax")
-      ks.join(broadcast(ranges), col("k").between(col("smin"), col("smax")))
-        .select(col("name")).distinct().as[String].collect().toSet
-    } else {
-      val ks0 = updates.select(expr(s"try_cast(`$key` AS BIGINT)").as("k"))
-      val ks = if (preDistinct) ks0 else ks0.distinct().localCheckpoint()
-      // ONE action (r19, guide §1.2): the BIGINT-cast null probe rides
-      // the range join — a LEFT join keeps null/uncastable keys as
-      // unmatched rows, so one aggregate returns both the degrade flag
-      // and the touched set, where the r18 shape ran a limit(1).count()
-      // probe job plus a join-collect job per commit
-      val ranges = files.map(f => (f.name, f.kmin, f.kmax))
-        .toDF("name", "kmin", "kmax")
-      val r = ks.join(broadcast(ranges),
-          col("k").between(col("kmin"), col("kmax")), "left")
-        .agg(max(when(col("k").isNull, 1).otherwise(0)).as("nocast"),
-          collect_set(col("name")).as("touched"))
-        .collect().head
-      if (!r.isNullAt(0) && r.getInt(0) == 1) files.map(_.name).toSet
-      else r.getSeq[String](1).toSet
-    }
-  }
-
   /** The type promotions the parquet reader performs when an old file's
     * physical type is NARROWER than the declared schema (verified
     * empirically on this Spark: INT32→long, INT32(16)→int,
@@ -1299,56 +1313,109 @@ object TxTable {
       (FloatType, DoubleType))
   }
 
-  /** MERGE's one-row-per-key contract AND its file pruning in ONE
-    * distributed action (r19, guide §1.2 — the r18 shape still ran
-    * three tiny jobs per commit: the keyCnt checkpoint, the dup-limit
-    * collect and touchedFileNames' probe+join; at q69/q93's commit
-    * cadence that job-count overhead dominated). The per-key counts
-    * feed the broadcast range join directly and one collect returns
-    * (any duplicated key, the cast-degrade flag, the touched names).
+  /** The one pruning probe of every key-set writer ([[merge]],
+    * [[mergeConditional]], [[deleteKeys]], [[deleteKeysDV]]): ONE Spark
+    * job with one shuffle returns the names of the live files whose key
+    * range intersects `keys` and, with `unique`, enforces MERGE's
+    * one-row-per-key contract on the way.
     *
-    * The uniqueness guard exists because Sources.upsert joins
-    * full_outer on the key, so duplicate update keys would FAN OUT
-    * into duplicate table rows — silent corruption of the
-    * one-row-per-key invariant. Fail loudly instead (Delta's MERGE
-    * throws on multiple source matches for the same reason).
+    * Shape: every row is keyed on the binary (`UnsafeRow`) form of its
+    * key — off the string path together with the key's BIGINT
+    * `try_cast`, a function of the key — and `reduceByKey` counts the
+    * keys; each reduce partition probes the file-range table with its
+    * distinct keys and returns its first duplicated key, the
+    * cast-degrade flag and the files it touched. Equal keys have equal
+    * binary forms, so null keys group together (two null keys ARE a
+    * duplicate, as under GROUP BY); floating keys are normalized first
+    * (-0.0 to 0.0, every NaN to one), the equality GROUP BY and the
+    * rewrite join apply.
     *
-    * Pruning semantics are IDENTICAL to [[touchedFileNames]]:
-    * string-keyed tables with full string stats prune on the
-    * lexicographic ranges (null keys match nothing); everything else
-    * prunes on the BIGINT cast, where ANY null/uncastable key degrades
-    * to touch-every-file (never-miss). Runs inside the OCC body, so a
-    * rebase re-runs the guard too — idempotent, and the contended-
-    * writer path is never the bench shape. */
-  private def uniqueKeysTouched(spark: SparkSession, files: Seq[FileEntry],
-                                updates: DataFrame, key: String)
-      : Set[String] = {
-    import spark.implicits._
-    val strPath =
-      updates.schema(key).dataType == org.apache.spark.sql.types.StringType &&
-        files.forall(f => f.smin.isDefined && f.smax.isDefined)
-    val keyCnt = updates.groupBy(col(key).as("_k")).agg(count(lit(1)).as("_c"))
-    val withCast =
-      if (strPath) keyCnt.withColumn("_kc", col("_k"))
-      else keyCnt.withColumn("_kc", expr("try_cast(`_k` AS BIGINT)"))
-    val ranges =
-      if (strPath) files.map(f => (f.name, f.smin.get, f.smax.get))
-        .toDF("name", "lo", "hi")
-      else files.map(f => (f.name, f.kmin, f.kmax)).toDF("name", "lo", "hi")
-    val r = withCast
-      .join(broadcast(ranges), col("_kc").between(col("lo"), col("hi")), "left")
-      .agg(
-        max(when(col("_c") > 1, lit(1)).otherwise(lit(0))).as("hasdup"),
-        max(when(col("_c") > 1, col("_k").cast("string"))).as("dupk"),
-        max(when(col("_kc").isNull, lit(1)).otherwise(lit(0))).as("nocast"),
-        collect_set(col("name")).as("touched"))
-      .collect().head
-    require(r.isNullAt(0) || r.getInt(0) == 0,
-      s"TxTable merge: updates carry duplicate key " +
-        s"'${if (r.isNullAt(1)) null else r.getString(1)}' — " +
+    * Uniqueness: Sources.upsert joins full_outer on the key, so
+    * duplicate update keys would FAN OUT into duplicate table rows —
+    * silent corruption of the one-row-per-key invariant. Fail loudly
+    * instead, naming the key (Delta's MERGE throws on multiple source
+    * matches for the same reason).
+    *
+    * Pruning: STRING keys of a table whose every live file carries the
+    * lexicographic smin/smax stats (r15) prune on those ranges in
+    * Spark's binary string order, and a null key touches no file.
+    * Everything else prunes on the BIGINT cast, where ANY null or
+    * uncastable key degrades to touch-every-file (a full rewrite is
+    * correct, a missed file is not), matching the writer side's
+    * full-range stats for such keys. Runs inside the OCC body, so a
+    * re-derive re-runs it too — idempotent. */
+  private def keyProbe(spark: SparkSession, files: Seq[FileEntry],
+                       keys: DataFrame, key: String,
+                       unique: Boolean): Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal,
+      UnsafeProjection, UnsafeRow}
+    import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val keyDt = keys.schema(key).dataType
+    val strPath = keyDt == StringType &&
+      files.forall(f => f.smin.isDefined && f.smax.isDefined)
+    val k = keyDt match {
+      case FloatType | DoubleType =>
+        when(isnan(col(key)), lit(Double.NaN).cast(keyDt))
+          .when(col(key) === 0, lit(0).cast(keyDt)).otherwise(col(key))
+      case _ => col(key)
+    }
+    val probe = keys.select(
+      (if (strPath) Seq(k) else Seq(k, expr(s"try_cast(`$key` AS BIGINT)"))): _*)
+    val schema = probe.schema
+    val rows = probe.queryExecution.toRdd
+    val slo = if (strPath) files.map(_.smin.get).toArray else Array.empty[String]
+    val shi = if (strPath) files.map(_.smax.get).toArray else Array.empty[String]
+    val nlo = files.map(_.kmin).toArray
+    val nhi = files.map(_.kmax).toArray
+    val parts = math.max(1, math.min(rows.getNumPartitions,
+      spark.sessionState.conf.numShufflePartitions))
+    val probed = rows
+      .mapPartitions { it =>
+        val proj = UnsafeProjection.create(schema)
+        it.map(r => (proj(r).copy(), 1L))
+      }
+      .reduceByKey(_ + _, parts)
+      .mapPartitions { it =>
+        val lo = slo.map(UTF8String.fromString)
+        val hi = shi.map(UTF8String.fromString)
+        val hit = new Array[Boolean](nlo.length)
+        var dup: UnsafeRow = null
+        var degrade = false
+        it.foreach { case (kr, n) =>
+          if (n > 1 && dup == null) dup = kr
+          var i = 0
+          if (strPath) {
+            if (!kr.isNullAt(0)) {
+              val s = kr.getUTF8String(0)
+              while (i < lo.length) {
+                if (lo(i).compareTo(s) <= 0 && s.compareTo(hi(i)) <= 0) hit(i) = true
+                i += 1
+              }
+            }
+          } else if (kr.isNullAt(1)) degrade = true
+          else if (!degrade) {
+            val x = kr.getLong(1)
+            while (i < nlo.length) {
+              if (nlo(i) <= x && x <= nhi(i)) hit(i) = true
+              i += 1
+            }
+          }
+        }
+        Iterator((Option(dup), degrade, hit.indices.filter(hit(_)).toArray))
+      }
+      .collect()
+    val dup = if (unique) probed.flatMap(_._1).headOption else None
+    def shown(d: UnsafeRow): String =
+      if (d.isNullAt(0)) null
+      else Cast(Literal(d.get(0, keyDt), keyDt), StringType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval().toString
+    require(dup.isEmpty,
+      s"TxTable merge: updates carry duplicate key '${shown(dup.get)}' — " +
         "one row per key required (dedupe with an explicit latest-wins rule first)")
-    if (!strPath && !r.isNullAt(2) && r.getInt(2) == 1) files.map(_.name).toSet
-    else r.getSeq[String](3).toSet
+    val names = files.map(_.name).toArray
+    if (!strPath && probed.exists(_._2)) names.toSet
+    else probed.flatMap(_._3).map(names(_)).toSet
   }
 
   /** Storage-level MERGE (upsert by `key`): only files whose key range
@@ -1445,7 +1512,7 @@ object TxTable {
               "— dropped names are never reusable (old files still hold " +
               "their bytes); pick a different name")
         }
-        val touchedSet = uniqueKeysTouched(spark, files, updates, key)
+        val touchedSet = keyProbe(spark, files, updates, key, unique = true)
         val touched = files.filter(f => touchedSet.contains(f.name))
         // touched files are read THROUGH the declared table schema
         // (read-by-name, like read()): a bare inferred read after a
@@ -1482,17 +1549,17 @@ object TxTable {
           else Some(StructType(tableSchema.get.fields.map(f =>
             widened.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f)) ++
             added.map(c => updates.schema(c))).json)
-        val cdc = if (!st.cdcOn) None else {
+        val changes = if (!st.cdcOn) None else {
           val finalFields = newSchema
             .map(DataType.fromJson(_).asInstanceOf[StructType].fields.toSeq)
             .orElse(tableSchema.map(_.fields.toSeq))
             .getOrElse(merged.schema.fields.toSeq)
-          writeCdcFiles(spark, cdcOfUpsert(base, updates, key, finalFields),
-            root, v, st.colMap)
+          Some(cdcOfUpsert(base, updates, key, finalFields))
         }
-        Some((writeFiles(spark, merged, root, key, f"$v%010d-merge",
-            st.statsCols, st.colMap),
-          touched.map(_.name), key, newSchema,
+        val (adds, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+          writeFiles(spark, merged, root, key, f"$v%010d-merge",
+            st.statsCols, st.colMap))
+        Some((adds, touched.map(_.name), key, newSchema,
           txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
       }
     }
@@ -1595,7 +1662,7 @@ object TxTable {
             s"TxTable mergeConditional: SET names unknown column(s) " +
               s"${unknown.mkString(", ")}")
         }
-        val touchedSet = uniqueKeysTouched(spark, files, updates, key)
+        val touchedSet = keyProbe(spark, files, updates, key, unique = true)
         val touched = files.filter(f => touchedSet.contains(f.name))
         val base =
           if (touched.isEmpty) spark.createDataFrame(
@@ -1609,11 +1676,11 @@ object TxTable {
           (col(key).as("_mk") +: lit(true).as("_tp") +:
             tblCols.filterNot(_ == key).map(c => col(c).as(s"_t_$c"))): _*)
         val j0 = tgt.join(src, Seq("_mk"), "full_outer")
-        // a CDC-enabled conditional merge derives FIVE frames from this
-        // join (the rewrite + four change-row branches): checkpoint it
-        // so the full_outer executes once and every branch reads the
-        // blocks (r18 optimization round); without cdc the join runs
-        // once anyway — no checkpoint, no extra pass
+        // a CDC-enabled conditional merge derives TWO frames from this
+        // join (the rewrite and the change rows), staged concurrently:
+        // checkpoint it so the full_outer executes once and both writes
+        // read the blocks (r18 optimization round); without cdc the join
+        // runs once anyway — no checkpoint, no extra pass
         val j = if (st.cdcOn) j0.localCheckpoint() else j0
         val srcAcc: String => org.apache.spark.sql.Column =
           c => if (c == key) col("_mk") else col(s"_s_$c")
@@ -1650,33 +1717,34 @@ object TxTable {
             .otherwise(tgtAcc(c)).as(c)
         }: _*)
         enforceInvariants(merged, st.invariants, "mergeConditional")
-        val cdc = if (!st.cdcOn) None else {
-          // change rows straight from the clause join: the same
-          // outcomes the rewrite materializes, emitted as the feed —
-          // deletes carry the target row, updates pre+post (no-op
+        val changes = if (!st.cdcOn) None else {
+          // change rows straight from the clause join, in ONE projection:
+          // the same outcomes the rewrite materializes, emitted as the
+          // feed — deletes carry the target row, updates pre+post (no-op
           // updates where the source equals the target stay silent),
-          // clause-admitted source-only keys insert
+          // clause-admitted source-only keys insert. Each join row yields
+          // the images its outcome calls for (at most two) through one
+          // inline over the non-null ones
           def side(acc: String => org.apache.spark.sql.Column) =
-            struct(tblCols.map(c =>
-              (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-          def rows(cond: org.apache.spark.sql.Column,
-                   acc: String => org.apache.spark.sql.Column,
-                   tpe: String) =
-            j.filter(cond).select(tblCols.map(c =>
-                (if (c == key) col("_mk") else acc(c)).as(c)): _*)
-              .withColumn("_change_type", lit(tpe))
+            tblCols.map(c => (if (c == key) col("_mk") else acc(c)).as(c))
+          def image(cond: org.apache.spark.sql.Column,
+                    acc: String => org.apache.spark.sql.Column,
+                    tpe: String) =
+            when(cond, struct(side(acc) :+ lit(tpe).as("_change_type"): _*))
           // the post side is the SET result when a SET map is declared
           // (the feed must carry what the rewrite WRITES, not the raw
           // source); no-op detection compares the same value
-          val updDiff = matchedUpd && !(side(updAcc) <=> side(tgtAcc))
-          val cdcDf = rows(matched && delC, tgtAcc, "delete")
-            .unionByName(rows(updDiff, tgtAcc, "update_preimage"))
-            .unionByName(rows(updDiff, updAcc, "update_postimage"))
-            .unionByName(rows(srcOnly && insC, srcAcc, "insert"))
-          writeCdcFiles(spark, cdcDf, root, v, st.colMap)
+          val updDiff = matchedUpd &&
+            !(struct(side(updAcc): _*) <=> struct(side(tgtAcc): _*))
+          Some(j.select(inline(filter(array(
+            image(matched && delC, tgtAcc, "delete"),
+            image(updDiff, tgtAcc, "update_preimage"),
+            image(updDiff, updAcc, "update_postimage"),
+            image(srcOnly && insC, srcAcc, "insert")), _.isNotNull))))
         }
-        val adds = writeFiles(spark, merged, root, key,
-          f"$v%010d-merge", st.statsCols, st.colMap)
+        val (adds, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+          writeFiles(spark, merged, root, key, f"$v%010d-merge",
+            st.statsCols, st.colMap))
         if (adds.isEmpty && touched.isEmpty && txn.isEmpty) None
         else Some((adds, touched.map(_.name), key, None,
           txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
@@ -1738,11 +1806,12 @@ object TxTable {
             }
         }
         enforceInvariants(df, st.invariants, "append")
-        val cdc = if (!st.cdcOn) None else
-          writeCdcFiles(spark,
-            df.withColumn("_change_type", lit("insert")), root, v, st.colMap)
-        val adds = writeFiles(spark, df, root, key,
-          f"$v%010d-append", st.statsCols, st.colMap)
+        val changes =
+          if (st.cdcOn) Some(df.withColumn("_change_type", lit("insert")))
+          else None
+        val (adds, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+          writeFiles(spark, df, root, key, f"$v%010d-append", st.statsCols,
+            st.colMap))
         if (adds.isEmpty && txn.isEmpty) None   // empty batch, no watermark
         else Some((adds, Seq.empty, key, None,
           txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
@@ -1761,18 +1830,17 @@ object TxTable {
     // broadcast range join) per call — measurable at st38's
     // per-micro-batch cadence (r14 judge finding #3)
     //
-    // r18 (optimization round): the distinct key set materializes ONCE
-    // — pruning, the anti-join and the CDC semi-join used to each
-    // re-execute the caller's keys plan; now they read these blocks.
-    // (Null keys match no equality join and no file range — dropping
-    // them up front changes nothing downstream.)
-    val ks = keys.select(col(key)).filter(col(key).isNotNull)
-      .distinct().localCheckpoint()
+    // the key set materializes ONCE (r18) — the probe, the anti-join and
+    // the CDC semi-join each read these blocks instead of re-executing
+    // the caller's keys plan. No distinct: the probe counts distinct
+    // keys itself, and a semi/anti join never fans out on a repeated
+    // key. (Null keys match no equality join and no file range —
+    // dropping them up front changes nothing downstream.)
+    val ks = keys.select(col(key)).filter(col(key).isNotNull).localCheckpoint()
     occRetry(root, "DELETE", allowRebase = true) { v =>
       val st = replayState(root, None)
       val files = st.live
-      val touchedSet = touchedFileNames(spark, files, ks, key,
-        preDistinct = true)
+      val touchedSet = keyProbe(spark, files, ks, key, unique = false)
       val touched = files.filter(f => touchedSet.contains(f.name))
       if (touched.isEmpty) None     // raced to a no-op: commit nothing
       else {
@@ -1787,12 +1855,13 @@ object TxTable {
         // cdc consumes the touched-files read twice: one pass (r18)
         val base = if (st.cdcOn) base0.localCheckpoint() else base0
         val remaining = base.join(ks, Seq(key), "left_anti")
-        val cdc = if (!st.cdcOn) None else
-          writeCdcFiles(spark,
-            base.join(ks, Seq(key), "left_semi")
-              .withColumn("_change_type", lit("delete")), root, v, st.colMap)
-        Some((writeFiles(spark, remaining, root, key, f"$v%010d-delete",
-          st.statsCols, st.colMap), touched.map(_.name), key, None, None, cdc))
+        val changes = if (!st.cdcOn) None else
+          Some(base.join(ks, Seq(key), "left_semi")
+            .withColumn("_change_type", lit("delete")))
+        val (adds, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+          writeFiles(spark, remaining, root, key, f"$v%010d-delete",
+            st.statsCols, st.colMap))
+        Some((adds, touched.map(_.name), key, None, None, cdc))
       }
     }
   }
@@ -1918,16 +1987,7 @@ object TxTable {
             st.schema.map(DataType.fromJson(_).asInstanceOf[StructType])
           val delCond = preds.map { case (c, lo, hi) =>
             col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-          val adds =
-            if (partial.isEmpty) Seq.empty
-            else {
-              val base = readEntries(spark, root, partial, declared, st.key,
-                st.colMap)
-              // NULL predicate results KEEP the row (SQL DELETE)
-              writeFiles(spark, base.filter(!coalesce(delCond, lit(false))),
-                root, st.key, f"$v%010d-delwhere", st.statsCols, st.colMap)
-            }
-          val cdc = if (!st.cdcOn) None else {
+          val changes = if (!st.cdcOn) None else {
             val doomedCovered =
               if (covered.isEmpty) None
               else Some(readEntries(spark, root, covered, declared, st.key,
@@ -1936,12 +1996,18 @@ object TxTable {
               if (partial.isEmpty) None
               else Some(readEntries(spark, root, partial, declared, st.key,
                 st.colMap).filter(coalesce(delCond, lit(false))))
-            val doomed = (doomedCovered ++ doomedPartial)
-              .reduceOption(_.unionByName(_))
-            doomed.flatMap(d => writeCdcFiles(spark,
-              d.withColumn("_change_type", lit("delete")), root, v,
-              st.colMap))
+            (doomedCovered ++ doomedPartial).reduceOption(_.unionByName(_))
+              .map(_.withColumn("_change_type", lit("delete")))
           }
+          val (adds, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+            if (partial.isEmpty) Seq.empty
+            else {
+              val base = readEntries(spark, root, partial, declared, st.key,
+                st.colMap)
+              // NULL predicate results KEEP the row (SQL DELETE)
+              writeFiles(spark, base.filter(!coalesce(delCond, lit(false))),
+                root, st.key, f"$v%010d-delwhere", st.statsCols, st.colMap)
+            })
           Some((adds, (covered ++ partial).map(_.name), st.key, None,
             txn.map { case (app, tv) => TxnAction(app, tv) }, cdc))
         }
@@ -1978,19 +2044,17 @@ object TxTable {
     * them by name like any other referenced file. */
   def deleteKeysDV(spark: SparkSession, root: String, keys: DataFrame,
                    key: String, txn: Option[(String, Long)] = None): Long = {
-    // r18 (optimization round): one materialization of the delete-key
-    // set, shared by the pruning pass and the hit semi-join below (the
-    // raw keys plan used to execute for each)
-    val ks = keys.select(col(key)).filter(col(key).isNotNull)
-      .distinct().localCheckpoint()
+    // one materialization of the delete-key set (r18), shared by the
+    // probe and the hit semi-join below (the raw keys plan used to
+    // execute for each); no distinct, as in [[deleteKeys]]
+    val ks = keys.select(col(key)).filter(col(key).isNotNull).localCheckpoint()
     occRetry(root, "DELETE_DV", allowRebase = true) { v =>
       val st = replayState(root, None)
       if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
         None   // already applied: idempotent no-op
       else {
         val files = st.live
-        val touchedSet = touchedFileNames(spark, files, ks, key,
-          preDistinct = true)
+        val touchedSet = keyProbe(spark, files, ks, key, unique = false)
         val touched = files.filter(f => touchedSet.contains(f.name))
         if (touched.isEmpty) {
           if (txn.isEmpty) None // raced to a no-op
@@ -2088,41 +2152,12 @@ object TxTable {
           val dvNames = needSidecar.map { case (b, i) =>
             b -> f"dv-$v%010d-$nonce-$i.parquet"
           }.toMap
-          if (needSidecar.nonEmpty) {
-            val idxDf = {
-              import spark.implicits._
-              needSidecar.toDF("_gf", "_gi")
-            }
-            val tmp = Files.createTempDirectory(Paths.get(root), "stage-dv-")
-            try {
-              combined.join(broadcast(idxDf), Seq("_gf"))
-                .select(col(key), col("_gi"))
-                .repartition(col("_gi"))
-                .write.partitionBy("_gi").mode("overwrite")
-                .parquet(tmp.toString)
-              needSidecar.foreach { case (b, i) =>
-                val dir = tmp.resolve(s"_gi=$i")
-                val part = listDir(dir)
-                  .find(_.getFileName.toString.startsWith("part-"))
-                  .getOrElse(throw new IllegalStateException(
-                    s"TxTable deleteKeysDV: no sidecar part file for $b"))
-                Files.move(part, dataDir(root).resolve(dvNames(b)),
-                  StandardCopyOption.ATOMIC_MOVE)
-              }
-            } finally {
-              import scala.jdk.CollectionConverters._
-              val walk = Files.walk(tmp)
-              val rest = try walk.iterator().asScala.toSeq.reverse
-                finally walk.close()
-              rest.foreach(Files.deleteIfExists(_))
-            }
-          }
           // change-feed materialization (cdc-enabled tables only): the
           // newly-dead FULL rows — the one case where a DV delete
           // reads more than the key column, the documented CDF write
           // cost (Delta pays the same); one multi-file read, one
           // broadcast semi-join on the (file, key) pairs
-          val cdc = if (!st.cdcOn) None else {
+          val changes = if (!st.cdcOn) None else {
             val changedEntries = changedBase.map(byBase)
             // files store PHYSICAL names (column mapping): scan through
             // the mapped schema, alias back to logical for the feed
@@ -2141,11 +2176,39 @@ object TxTable {
                   col(st.physOf(f.name)).as(f.name)) :+ col("_gf")).toSeq: _*)
               case _ => fullPhys
             }
-            writeCdcFiles(spark,
-              full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
-                .drop("_gf").withColumn("_change_type", lit("delete")),
-              root, v, st.colMap)
+            Some(full.join(broadcast(fresh), Seq("_gf", key), "left_semi")
+              .drop("_gf").withColumn("_change_type", lit("delete")))
           }
+          val (_, cdc) = stageWrites(spark, root, v, st.colMap, changes)(
+            if (needSidecar.nonEmpty) {
+              val idxDf = {
+                import spark.implicits._
+                needSidecar.toDF("_gf", "_gi")
+              }
+              val tmp = Files.createTempDirectory(Paths.get(root), "stage-dv-")
+              try {
+                combined.join(broadcast(idxDf), Seq("_gf"))
+                  .select(col(key), col("_gi"))
+                  .repartition(col("_gi"))
+                  .write.partitionBy("_gi").mode("overwrite")
+                  .parquet(tmp.toString)
+                needSidecar.foreach { case (b, i) =>
+                  val dir = tmp.resolve(s"_gi=$i")
+                  val part = listDir(dir)
+                    .find(_.getFileName.toString.startsWith("part-"))
+                    .getOrElse(throw new IllegalStateException(
+                      s"TxTable deleteKeysDV: no sidecar part file for $b"))
+                  Files.move(part, dataDir(root).resolve(dvNames(b)),
+                    StandardCopyOption.ATOMIC_MOVE)
+                }
+              } finally {
+                import scala.jdk.CollectionConverters._
+                val walk = Files.walk(tmp)
+                val rest = try walk.iterator().asScala.toSeq.reverse
+                  finally walk.close()
+                rest.foreach(Files.deleteIfExists(_))
+              }
+            })
           val adds = changedBase.flatMap { b =>
             val f = byBase(b)
             val live = liveCnt.getOrElse(b, 0L)

@@ -694,4 +694,44 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     q.processAllAvailable(); q.stop()
     assert(spark.table("dedup_out").count() === 100)
   }
+
+  test("change-feed AvailableNow: a drain after a failed batch serves it and every later version once, then stops") {
+    import spark.implicits._
+    import graft.sources.TxTable
+    val dir = tempDir("feed-available-now")
+    val root = s"$dir/tbl"; val chk = s"$dir/chk"
+    TxTable.create(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root, "k",
+      cdc = true)                                                          // v1
+    TxTable.merge(spark, root, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k") // v2
+    def drain(fail: Boolean): Seq[Long] = {
+      val served = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val q = spark.readStream.format("graft").option("startingVersion", "1")
+        .load(root).writeStream
+        .option("checkpointLocation", chk)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val vs = b.select("_commit_version").collect().map(_.getLong(0))
+          if (fail) throw new IllegalStateException("injected sink failure")
+          served.synchronized(served ++= vs)
+          ()
+        }
+        .start()
+      try q.awaitTermination(120000)
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException if fail => }
+      assert(!q.isActive, "an AvailableNow drain must stop by itself")
+      served.synchronized(served.toSeq)
+    }
+    // the failed drain leaves batch 0 (v1..v2) planned in the offset log
+    // but uncommitted
+    assert(drain(fail = true).isEmpty)
+    TxTable.merge(spark, root, Seq((4L, "d")).toDF("k", "v"), "k")          // v3
+    TxTable.deleteKeys(spark, root, Seq(Tuple1(1L)).toDF("k"), "k")         // v4
+    // the next drain re-runs batch 0 and then serves v3 and v4: rows per
+    // version are v1's two inserts, v2's update pair and insert, v3's
+    // insert and v4's delete — each exactly once
+    val served = drain(fail = false)
+    assert(served.groupBy(identity).map { case (v, rs) => v -> rs.size } ===
+      Map(1L -> 2, 2L -> 3, 3L -> 1, 4L -> 1), served)
+    assert(drain(fail = false).isEmpty, "a drain with nothing new serves nothing")
+  }
 }

@@ -1527,13 +1527,13 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
       TxTable.merge(spark, root, upd, "k")
       spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     } finally spark.sparkContext.clearJobGroup()
-    // the r19 fold: source checkpoint + ONE guard/prune aggregate +
-    // the staged write (footer stats add no job), each fanned into a
-    // couple of AQE stage jobs — 8 observed. The r18 shape paid three
-    // more actions per commit (keyCnt checkpoint, dup-limit collect,
-    // cast-null probe): 11 observed on the same scenario, so the
-    // bound discriminates the fold while leaving AQE headroom.
-    assert(jobs <= 8,
+    // the guard and the pruning are ONE job (the key probe's single
+    // reduceByKey pass) and the staged write fans into a few AQE stage
+    // jobs (footer stats add none) — 5 observed. The r19 aggregate form
+    // of the probe ran as 2-4 AQE stage jobs (8 observed here) and the
+    // r18 shape three more actions again (11), so the bound pins the
+    // one-job probe.
+    assert(jobs <= 5,
       s"merge ran $jobs jobs — guard, pruning and write must stay a " +
         "constant few actions per commit")
     val got = TxTable.read(spark, root).filter(col("k") < 100).collect()
@@ -1831,5 +1831,202 @@ class TxTableSpec extends AnyFunSuite with SharedSpark {
         r.getAs[Long]("_commit_version"))).toSet
     assert(got === Set((3L, 333L, 2L), (4L, 444L, 4L)),
       s"both eras' change files must serve under the new name: $got")
+  }
+
+  // ---- the lean commit path: one-job key probe, one-pass change rows,
+  // data and change files staged together ----------------------------
+
+  /** A 2-file cdc sink and a checkpointed 150-row batch of which 50 keys
+    * update rows and 100 insert — the shape of a streaming sink's
+    * micro-batch commit. */
+  private def sinkAndBatch(prefix: String) = {
+    import spark.implicits._
+    val root = tempDir(prefix).toString + "/tbl"
+    TxTable.create(spark,
+      (0L until 200L).map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq")
+        .repartitionByRange(2, col("k")), root, "k", cdc = true)
+    assert(TxTable.snapshot(root).size === 2)
+    val batch = (150L until 300L).map(k => (k, s"u$k", 1L)).toDF("k", "v", "seq")
+      .repartition(4).localCheckpoint()
+    (root, batch)
+  }
+
+  private val newer: TxTable.MergeCond = (s, t) => s("seq") > t("seq")
+
+  test("mergeConditional with a change feed: a 150-row micro-batch commit runs at most 6 jobs") {
+    val (root, batch) = sinkAndBatch("txt-cond-jobs")
+    val prop = "graft.test.commit-tag"
+    val tags = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tags.put(e.jobId, Option(e.properties).flatMap(p => Option(p.getProperty(prop)))
+          .getOrElse("<none>"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val group = s"txt-cond-jobs-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "cdc micro-batch merge")
+    spark.sparkContext.setLocalProperty(prop, group)
+    val ids = try {
+      TxTable.mergeConditional(spark, root, batch, "k",
+        matchedUpdate = Some(newer), txn = Some(("app", 0L)))
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).toSeq
+    } finally {
+      spark.sparkContext.setLocalProperty(prop, null)
+      spark.sparkContext.clearJobGroup()
+    }
+    // the one-job key probe, the rewrite-join checkpoint (three AQE
+    // stage jobs) and one job per write; a multi-job probe, or a second
+    // pass over the change rows before their write, exceeds the bound
+    assert(ids.size <= 6, s"cdc merge ran ${ids.size} jobs")
+    // the change-file write runs on a helper thread: EVERY job the call
+    // started must carry the caller's job group (so the count above is
+    // complete) and its other local properties. A sentinel job fences
+    // the asynchronous listener: job ids rise in submission order, so
+    // once the sentinel's start is seen, so is every earlier job's
+    val fence = s"$group-fence"
+    spark.sparkContext.setJobGroup(fence, "listener fence")
+    try spark.sparkContext.parallelize(Seq(1), 1).count()
+    finally spark.sparkContext.clearJobGroup()
+    val fenceId = spark.sparkContext.statusTracker.getJobIdsForGroup(fence).head
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!tags.containsKey(fenceId) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val during = tags.asScala.toMap.filter(_._1 < fenceId)
+    assert(during.keySet === ids.toSet && during.values.forall(_ == group),
+      s"jobs without the caller's local properties: $during (group: $ids)")
+    // and the commit is exact: 50 updates (pre + post), 100 inserts
+    val feed = TxTable.changes(spark, root, 1L, 2L)
+      .groupBy("_change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(feed === Map("update_preimage" -> 50L, "update_postimage" -> 50L,
+      "insert" -> 100L))
+    assert(TxTable.read(spark, root).count() === 300L)
+  }
+
+  test("key probe: duplicates split across partitions and repeated null keys fail, naming the key; nothing changes") {
+    import spark.implicits._
+    for (cdc <- Seq(false, true)) {
+      val root = tempDir(s"txt-probe-dup-$cdc").toString + "/tbl"
+      TxTable.create(spark,
+        (0L until 100L).map(k => (k, s"v$k")).toDF("k", "v")
+          .repartitionByRange(2, col("k")), root, "k", cdc = cdc)
+      TxTable.merge(spark, root, Seq((1L, "w")).toDF("k", "v"), "k")   // v2
+      val v = TxTable.currentVersion(root)
+      val live = TxTable.snapshot(root).map(_.name).toSet
+      val feed = TxTable.changes(spark, root, 1L, v).collect().toSet
+      val dup = Seq((7L, "a"), (50L, "b"), (8L, "c"), (7L, "d"))
+      // one input partition per row: the duplicates meet only in the shuffle
+      val dupDf = spark.createDataFrame(spark.sparkContext.parallelize(dup, dup.size))
+        .toDF("k", "v").localCheckpoint()
+      val nulls = Seq((Option.empty[Long], "a"), (Some(3L), "b"), (Option.empty[Long], "c"))
+      val nullDf = spark.createDataFrame(spark.sparkContext.parallelize(nulls, nulls.size))
+        .toDF("k", "v").localCheckpoint()
+      for ((batch, shown) <- Seq(dupDf -> "'7'", nullDf -> "'null'")) {
+        val e1 = intercept[IllegalArgumentException] {
+          TxTable.merge(spark, root, batch, "k")
+        }
+        val e2 = intercept[IllegalArgumentException] {
+          TxTable.mergeConditional(spark, root, batch, "k")
+        }
+        Seq(e1, e2).foreach(e => assert(
+          e.getMessage.contains(s"duplicate key $shown"), e.getMessage))
+      }
+      assert(TxTable.currentVersion(root) === v)
+      assert(TxTable.snapshot(root).map(_.name).toSet === live)
+      if (cdc) assert(TxTable.changes(spark, root, 1L, v).collect().toSet === feed)
+    }
+    // the string-stats path names a duplicated string key the same way
+    val sroot = tempDir("txt-probe-dup-str").toString + "/tbl"
+    TxTable.create(spark, (0 until 50).map(i => (f"k$i%03d", i)).toDF("k", "n")
+      .repartitionByRange(2, col("k")), sroot, "k")
+    val sdup = Seq(("k010", 1), ("k040", 2), ("k010", 3))
+    val e = intercept[IllegalArgumentException] {
+      TxTable.merge(spark, sroot, spark.createDataFrame(
+        spark.sparkContext.parallelize(sdup, 3)).toDF("k", "n"), "k")
+    }
+    assert(e.getMessage.contains("duplicate key 'k010'"), e.getMessage)
+    assert(TxTable.currentVersion(sroot) === 1L)
+  }
+
+  test("key probe: a null or uncastable key touches every file; string stats prune, a null string key touches none") {
+    import spark.implicits._
+    // deleteKeys drops null keys before the probe; a merge keeps them
+    val root = tempDir("txt-probe-null").toString + "/tbl"
+    TxTable.create(spark, (0L until 400L).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartitionByRange(4, col("k")), root, "k")
+    val before = TxTable.snapshot(root).map(_.name).toSet
+    TxTable.merge(spark, root, Seq((Option.empty[Long], "n"), (Some(5L), "u"))
+      .toDF("k", "v"), "k")
+    assert(TxTable.snapshot(root).map(_.name).toSet.intersect(before).isEmpty,
+      "a null key must degrade the BIGINT probe to touch-every-file")
+    val sroot = tempDir("txt-probe-str").toString + "/tbl"
+    TxTable.create(spark, (0 until 400).map(i => (f"k$i%03d", i)).toDF("k", "n")
+      .repartitionByRange(4, col("k")), sroot, "k")
+    val sbefore = TxTable.snapshot(sroot).map(_.name).toSet
+    TxTable.merge(spark, sroot, Seq((Option.empty[String], 1), (Some("k005"), 2))
+      .toDF("k", "n"), "k")
+    assert((sbefore -- TxTable.snapshot(sroot).map(_.name)).size === 1,
+      "string stats prune to the one file holding k005; the null key touches none")
+    // deletes share the probe: one touched file each
+    TxTable.deleteKeys(spark, root, Seq(Tuple1(399L), Tuple1(399L)).toDF("k"), "k")
+    TxTable.deleteKeysDV(spark, sroot, Seq(Tuple1("k399")).toDF("k"), "k")
+    assert(TxTable.read(spark, root).count() === 400L)     // + the null-key row
+    assert(TxTable.read(spark, sroot).count() === 400L)    // + the null-key row
+  }
+
+  test("a cdc conditional merge that changes nothing commits no change files and leaves no staging") {
+    import spark.implicits._
+    val (root, _) = sinkAndBatch("txt-cond-empty")
+    // stale updates only: every clause filters, the txn stamp commits
+    val stale = (0L until 50L).map(k => (k, s"s$k", -1L)).toDF("k", "v", "seq")
+      .localCheckpoint()
+    val v = TxTable.mergeConditional(spark, root, stale, "k",
+      matchedUpdate = Some(newer), txn = Some(("app", 1L)))
+    assert(v === 2L)
+    val record = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_graft_log", f"v$v%010d.json")), "UTF-8")
+    assert(!record.contains("\"cdc\""), s"a no-change commit logged change files: $record")
+    import scala.jdk.CollectionConverters._
+    def names(d: String) = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(d))
+      try l.iterator().asScala.map(_.getFileName.toString).toSeq finally l.close()
+    }
+    assert(!names(root).exists(_.startsWith("stage-")), names(root))
+    assert(!names(root + "/data").exists(_.startsWith("cdc-")), names(root + "/data"))
+    assert(TxTable.changes(spark, root, 1L, 2L).count() === 0L)
+  }
+
+  test("a failure in either concurrent write commits nothing; the next writer succeeds") {
+    import spark.implicits._
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "merge" -> (r => TxTable.merge(spark, r,
+        Seq((5L, "m", 2L), (900L, "m", 2L)).toDF("k", "v", "seq"), "k")),
+      "mergeConditional" -> (r => TxTable.mergeConditional(spark, r,
+        Seq((6L, "c", 2L), (901L, "c", 2L)).toDF("k", "v", "seq"), "k",
+        matchedUpdate = Some(newer))),
+      "append" -> (r => TxTable.append(spark, r,
+        Seq((902L, "a", 2L)).toDF("k", "v", "seq"), "k")),
+      "deleteKeys" -> (r => TxTable.deleteKeys(spark, r, Seq(Tuple1(7L)).toDF("k"), "k")))
+    for (cdc <- Seq(false, true); failing <- Seq("data", "cdc") if cdc || failing == "data";
+         (name, op) <- ops) {
+      val root = tempDir(s"txt-stage-fail-$name").toString + "/tbl"
+      TxTable.create(spark, (0L until 200L).map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq")
+        .repartitionByRange(2, col("k")), root, "k", cdc = cdc)
+      val live = TxTable.snapshot(root)
+      val rowsBefore = TxTable.read(spark, root).collect().toSet
+      TxTable.testStageFault.set(w =>
+        if (w == failing) throw new java.io.IOException(s"injected $w-write failure"))
+      val e = try intercept[java.io.IOException](op(root))
+        finally TxTable.testStageFault.set(null)
+      assert(e.getMessage === s"injected $failing-write failure", s"$name/$failing")
+      assert(TxTable.currentVersion(root) === 1L, s"$name/$failing committed")
+      assert(TxTable.snapshot(root) === live)
+      assert(TxTable.read(spark, root).collect().toSet === rowsBefore)
+      op(root)
+      assert(TxTable.currentVersion(root) === 2L, s"$name/$failing: next writer")
+      if (cdc) assert(TxTable.changes(spark, root, 1L, 2L).count() > 0L, s"$name/$failing")
+    }
   }
 }
